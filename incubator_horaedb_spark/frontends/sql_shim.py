@@ -44,7 +44,7 @@ from incubator_horaedb_spark.serving import (
     StatementInfo,
     validate_partition_table_access,
 )
-from incubator_horaedb_spark.table import Table
+from incubator_horaedb_spark.table import Table, local_batch
 
 _IDENT = r"`(?:[^`]+)`|[A-Za-z_][\w]*"
 
@@ -705,9 +705,7 @@ class Engine:
                     # the reference accepts string literals for varbinary
                     # columns (cases/common/basic.sql varbinary round-trip)
                     r[c] = r[c].encode("utf-8")
-        df = self.spark.createDataFrame(
-            [tuple(r[c] for c in cols) for r in rows], T.StructType(fields)
-        )
+        df = local_batch(self.spark, [[r[c] for r in rows] for c in cols], T.StructType(fields))
         for c in cols:
             if schema.column(c).kind == "timestamp":
                 df = df.withColumn(c, F.timestamp_millis(F.col(c)))
@@ -725,11 +723,31 @@ class Engine:
 
     DEFAULT_CATALOG = "horaedb"  # catalog/src/consts.rs:24 DEFAULT_CATALOG
 
-    def register_views(self) -> None:
-        for t in self.catalog.list_tables():
+    # an identifier: backtick-quoted (may hold a dotted table name) or bare
+    _WORD_RE = re.compile(r"`([^`]+)`|([A-Za-z_]\w*)")
+    _SYSTEM_TABLES_RE = re.compile(r"\bsystem\s*\.\s*public\s*\.\s*tables\b", re.I)
+
+    def register_views(self, stmt: str | None = None) -> None:
+        """(Re-)register the dedup-read view of every catalog table — or,
+        given a statement, only of the tables whose name or view name it
+        contains as an identifier.  The match ignores case and quoting
+        context, so it may register a table the statement does not read
+        (harmless) but never misses one it does; a SELECT then pays for
+        the tables it names, not for the whole catalog.  The system
+        tables view is built only when the statement names it."""
+        tables = self.catalog.list_tables()
+        if stmt is not None:
+            words = {(q or w).lower() for q, w in self._WORD_RE.findall(stmt)}
+            tables = [
+                t for t in tables
+                if t.lower() in words or self._view_name(t).lower() in words
+            ]
+        for t in tables:
             Table(self.spark, self.catalog, t).read().createOrReplaceTempView(
                 self._view_name(t)
             )
+        if stmt is not None and not self._SYSTEM_TABLES_RE.search(stmt):
+            return
         # system.public.tables (system_catalog/src/tables.rs:51-91: timestamp,
         # catalog, schema, table_name, table_id, engine).  The reference's
         # own integration case is disabled with a TODO ("Couldn't find table
@@ -759,7 +777,7 @@ class Engine:
             rewrite_sql_functions,
         )
 
-        self.register_views()
+        self.register_views(stmt)
         register_sql_functions(self.spark)
         # EXPLAIN VERBOSE (DataFusion: show every optimizer pass — corpus
         # dml/issue-1087.sql) → Spark's EXPLAIN EXTENDED (parsed/analyzed/
@@ -769,12 +787,7 @@ class Engine:
             if "." in t:
                 stmt = stmt.replace(f"`{t}`", f"`{self._view_name(t)}`")
         # system catalog table reference → registered view
-        stmt = re.sub(
-            r"\bsystem\s*\.\s*public\s*\.\s*tables\b",
-            "__system_tables",
-            stmt,
-            flags=re.I,
-        )
+        stmt = self._SYSTEM_TABLES_RE.sub("__system_tables", stmt)
         return self.spark.sql(
             self._coerce_ts_literals(rewrite_qualify(rewrite_sql_functions(stmt)))
         )

@@ -4,10 +4,11 @@ The reference runs compaction on a scheduler
 (src/analytic_engine/src/compaction/scheduler.rs:1-822: periodic picker →
 rewrite) and enforces TTL per table.  The Spark rendering is a batch
 maintenance job — run it from cron / an orchestrator (or a Structured
-Streaming trigger loop): sweep every table, rewrite small files per time
-partition (compact) and drop expired segments (TTL).  At 100 TB each
-table's sweep is independent and embarrassingly parallel across tables;
-per-table work is bounded by partitions touched since the last sweep.
+Streaming trigger loop): sweep every table, drop expired segments (TTL)
+and rewrite small files (compact).  Each table's sweep is independent of
+the others.  Per table, compaction is one Spark rewrite job over every
+live segment, whether or not it changed since the last sweep, followed by
+one rename-aside commit per segment.
 """
 
 from __future__ import annotations

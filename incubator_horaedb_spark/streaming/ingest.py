@@ -28,7 +28,7 @@ from pyspark.sql import types as T
 from incubator_horaedb_spark.catalog import TableOptions
 from incubator_horaedb_spark.frontends.sql_shim import Engine
 from incubator_horaedb_spark.schema import ColumnSchema, TableSchema
-from incubator_horaedb_spark.table import Table
+from incubator_horaedb_spark.table import Table, local_batch
 
 _SPARK_TO_KIND = {
     "string": "string",
@@ -142,15 +142,26 @@ def ingest_rows(
     no tag information."""
     from pyspark.sql import functions as F
 
-    from incubator_horaedb_spark.table import Table
-
     cols: list[str] = []
     for r in rows:
         for k in r:
             if k not in cols:
                 cols.append(k)
-    data = [tuple(r.get(c) for c in cols) for r in rows]
-    mdf = engine.spark.createDataFrame(data, _batch_schema(rows, cols))
+    schema = _batch_schema(rows, cols)
+    if engine.catalog.exists(table_name):
+        # the protocol timestamp is the existing table's timestamp key,
+        # whatever that key is named (an SQL-created table may use `t`)
+        key = engine.catalog.get(table_name).schema.timestamp_column
+        if key != ts_col and ts_col in cols:
+            if key in cols:
+                raise ValueError(
+                    f"field {key!r} collides with the timestamp key of {table_name!r}"
+                )
+            schema = T.StructType(
+                [T.StructField(key, f.dataType) if f.name == ts_col else f for f in schema]
+            )
+        ts_col = key
+    mdf = local_batch(engine.spark, [[r.get(c) for r in rows] for c in cols], schema)
     if ts_col in mdf.columns:
         mdf = mdf.withColumn(ts_col, F.timestamp_millis(F.col(ts_col).cast("long")))
     if tag_cols is None:

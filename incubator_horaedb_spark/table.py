@@ -22,9 +22,16 @@ src/analytic_engine/src/row_iter/):
 - TTL: rows older than now - ttl are filtered out (and their whole
   segments pruned) when enable_ttl (table_options.rs:60).
 
-Compaction (compaction/picker.rs): ``compact`` rewrites a time partition's
-many small files into few, applying the dedup so read amplification drops —
-the TimeWindow picker analogue.
+Compaction (compaction/picker.rs): ``compact`` rewrites every live time
+partition's many small files into few, applying the dedup so read
+amplification drops — the TimeWindow picker analogue.  One Spark job
+rewrites all of a table's segments: it reads the data dir once, shuffles
+each segment into ``n_output_files(segment bytes)`` files and writes them
+partitioned by segment into a staging dir, so the fixed per-job cost is
+paid once per table, not once per segment; each segment is then swapped in
+by its own rename-aside commit.  The unit of rewrite and TTL expiry is the
+leaf segment directory — ``__segment=s``, or ``__partition=p/__segment=s``
+on key- and random-partitioned tables.
 """
 
 from __future__ import annotations
@@ -34,6 +41,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from incubator_horaedb_spark import fsops
 from incubator_horaedb_spark.catalog import Catalog, pick_segment_duration_ms
@@ -45,6 +53,58 @@ from incubator_horaedb_spark.partition import (
     random_partition_expr,
 )
 from incubator_horaedb_spark.schema import SEGMENT_COLUMN, SEQ_COLUMN, TSID_COLUMN
+
+
+# Python value types a batch column of each Spark type accepts: exact
+# types, as createDataFrame's verifySchema checks them (a bool is not an
+# int, an int is not a float).  A string column takes any value as its
+# text, as createDataFrame coerces it (a bool as 'true'/'false').
+_BATCH_TYPES = {
+    "long": (int,),
+    "double": (float,),
+    "boolean": (bool,),
+    "binary": (bytes, bytearray),
+}
+
+
+def _batch_column(field: T.StructField, values: list) -> list:
+    kind = field.dataType.typeName()
+    if kind == "string":
+        return [
+            v if v is None or type(v) is str
+            else str(v).lower() if isinstance(v, bool) else str(v)
+            for v in values
+        ]
+    accepts = _BATCH_TYPES[kind]
+    for v in values:
+        if v is None:
+            continue
+        if type(v) not in accepts:
+            raise TypeError(
+                f"column {field.name!r} ({field.dataType.simpleString()}) "
+                f"can not accept {v!r} of type {type(v).__name__}"
+            )
+        if kind == "long" and not -(1 << 63) <= v < 1 << 63:
+            raise ValueError(f"column {field.name!r}: {v} is out of the bigint range")
+    return values
+
+
+def local_batch(spark: SparkSession, columns: list[list], schema: T.StructType) -> DataFrame:
+    """One write batch (``columns[i]`` holds the values of
+    ``schema.fields[i]``) as an Arrow table: Spark plans it as a
+    LocalRelation, so the batch needs no RDD and no Python worker.  Each
+    Arrow column is built with its field's explicit type after the checks
+    of ``_batch_column``, because Arrow would silently truncate a float
+    into an int64 column; a value that does not fit raises."""
+    import pyarrow as pa
+
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    arrays = [
+        pa.array(_batch_column(f, values), type=to_arrow_type(f.dataType))
+        for f, values in zip(schema.fields, columns)
+    ]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, names=schema.names), schema)
 
 
 class Table:
@@ -144,21 +204,19 @@ class Table:
             SEGMENT_COLUMN,
             (F.unix_millis(F.col(schema.timestamp_column)) / seg_ms).cast("long"),
         )
-        part_cols = [SEGMENT_COLUMN]
+        part_cols = self._layout_columns(meta.options)
         if meta.options.partition_keys:
             # key-partitioned table (partition/rule/key.rs): hash bucket col
             df = df.withColumn(
                 PARTITION_COLUMN,
                 key_partition_expr(meta.options.partition_keys, meta.options.num_partitions),
             )
-            part_cols = [PARTITION_COLUMN, SEGMENT_COLUMN]
-        elif meta.options.partition_method == "random" and meta.options.num_partitions > 1:
+        elif PARTITION_COLUMN in part_cols:
             # random write scatter (partition/rule/random.rs:40-48); reads
             # always fan out to every partition (random.rs:50-53)
             df = df.withColumn(
                 PARTITION_COLUMN, random_partition_expr(meta.options.num_partitions)
             )
-            part_cols = [PARTITION_COLUMN, SEGMENT_COLUMN]
         if meta.options.sampled_sort_key:
             # cluster rows for the sampled key inside each task's output
             # files: no shuffle, but every row group's min/max stats on the
@@ -173,6 +231,16 @@ class Table:
             .parquet(self.catalog.data_dir(self.name))
         )
         return seq
+
+    @staticmethod
+    def _layout_columns(options) -> list[str]:
+        """Directory partition columns, outermost first: key- and
+        random-partitioned tables nest segments under ``__partition``."""
+        if options.partition_keys or (
+            options.partition_method == "random" and options.num_partitions > 1
+        ):
+            return [PARTITION_COLUMN, SEGMENT_COLUMN]
+        return [SEGMENT_COLUMN]
 
     # -------------------------------------------------------------- read --
     def last_seq(self) -> int:
@@ -226,9 +294,7 @@ class Table:
             df = df.filter(F.unix_millis(F.col(schema.timestamp_column)) >= cutoff)
 
         if meta.options.update_mode == "OVERWRITE":
-            pk = schema.effective_primary_key
-            w = Window.partitionBy(*pk).orderBy(F.col(SEQ_COLUMN).desc())
-            df = df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
+            df = _keep_newest(df, schema.effective_primary_key)
 
         keep = [c.name for c in schema.columns]
         if with_internal:
@@ -239,13 +305,12 @@ class Table:
         """Explicit read schema = current table schema (+ internals) so old
         segments written before an ALTER ADD COLUMN read the new column as
         NULL — schema evolution without mergeSchema scans."""
-        from pyspark.sql import types as T
-
         meta = self.meta
         s = meta.schema.spark_schema(include_internal=True)
-        extra = [T.StructField(SEGMENT_COLUMN, T.LongType(), True)]
-        if meta.options.partition_keys:
-            extra.insert(0, T.StructField(PARTITION_COLUMN, T.IntegerType(), True))
+        types = {PARTITION_COLUMN: T.IntegerType(), SEGMENT_COLUMN: T.LongType()}
+        extra = [
+            T.StructField(c, types[c], True) for c in self._layout_columns(meta.options)
+        ]
         return T.StructType(s.fields + extra)
 
     def read_time_range(
@@ -291,9 +356,7 @@ class Table:
             now = int(time.time() * 1000) if now_ms is None else now_ms
             df = df.filter(ts_ms >= now - meta.options.ttl_ms)
         if meta.options.update_mode == "OVERWRITE":
-            pk = schema.effective_primary_key
-            w = Window.partitionBy(*pk).orderBy(F.col(SEQ_COLUMN).desc())
-            df = df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
+            df = _keep_newest(df, schema.effective_primary_key)
         return df.select(*[c.name for c in schema.columns])
 
     def read_pruned(
@@ -349,9 +412,7 @@ class Table:
                 F.unix_millis(F.col(schema.timestamp_column)) >= now - meta.options.ttl_ms
             )
         if meta.options.update_mode == "OVERWRITE":
-            pk = schema.effective_primary_key
-            w = Window.partitionBy(*pk).orderBy(F.col(SEQ_COLUMN).desc())
-            df = df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
+            df = _keep_newest(df, schema.effective_primary_key)
         return df.select(*[c.name for c in schema.columns])
 
     # -------------------------------------------------------- maintenance --
@@ -364,29 +425,45 @@ class Table:
     # outputs the same way).
 
     _SEGMENT_DIR_RE = re.compile(f"^{SEGMENT_COLUMN}=\\d+$")
+    _PARTITION_DIR_RE = re.compile(f"^{PARTITION_COLUMN}=\\d+$")
+
+    def _leaf_dirs(self, root: str) -> list[str]:
+        """Paths, relative to ``root``, of the segment directories under it:
+        ``__segment=<digits>``, or ``__partition=<digits>/__segment=<digits>``
+        on partitioned tables.
+
+        Strictly digits — anything else (a crashed rewrite's leftovers, a
+        foreign file) is not a segment and must not reach ttl_expire's
+        int() or the rewrite."""
+        out = []
+        for name in fsops.list_dirs(self.spark, root):
+            if self._SEGMENT_DIR_RE.match(name):
+                out.append(name)
+            elif self._PARTITION_DIR_RE.match(name):
+                out.extend(
+                    f"{name}/{seg}"
+                    for seg in fsops.list_dirs(
+                        self.spark, f"{root}/{name}", prefix=f"{SEGMENT_COLUMN}="
+                    )
+                    if self._SEGMENT_DIR_RE.match(seg)
+                )
+        return out
 
     def _segment_dirs(self) -> list[tuple[str, str]]:
-        """(name, full path) of every time-partition directory.
-
-        Strictly ``__segment=<digits>`` — anything else under the data dir
-        (a crashed rewrite's leftovers, a foreign file) is not a segment
-        and must not reach ttl_expire's int() or compact's rewrite loop."""
+        """(relative name, full path) of every leaf segment directory — the
+        unit of TTL expiry and of the rewrite commit."""
         data = self.catalog.data_dir(self.name)
-        return [
-            (seg, f"{data}/{seg}")
-            for seg in fsops.list_dirs(self.spark, data, prefix=f"{SEGMENT_COLUMN}=")
-            if self._SEGMENT_DIR_RE.match(seg)
-        ]
+        return [(seg, f"{data}/{seg}") for seg in self._leaf_dirs(data)]
 
     # Rewrite staging/rollback areas.  Dot-prefixed so Spark's file listing
     # (which skips '.'/'_'-prefixed paths) never discovers them as data —
     # a crashed rewrite can leave them behind without polluting reads or
     # partition discovery.
-    def _tmp_dir(self, seg: str) -> str:
-        return f"{self.catalog.data_dir(self.name)}/.rewrite-tmp/{seg}"
+    def _tmp_dir(self, seg: str = "") -> str:
+        return f"{self.catalog.data_dir(self.name)}/.rewrite-tmp/{seg}".rstrip("/")
 
-    def _aside_dir(self, seg: str) -> str:
-        return f"{self.catalog.data_dir(self.name)}/.rewrite-old/{seg}"
+    def _aside_dir(self, seg: str = "") -> str:
+        return f"{self.catalog.data_dir(self.name)}/.rewrite-old/{seg}".rstrip("/")
 
     def _recover_stale_rewrites(self) -> None:
         """Crash recovery before any rewrite: drop half-written tmp output;
@@ -394,14 +471,16 @@ class Table:
         (a crash hit between the two commit renames), else it is a
         committed rewrite whose cleanup delete was lost — drop it."""
         data = self.catalog.data_dir(self.name)
-        fsops.delete(self.spark, f"{data}/.rewrite-tmp")
-        for seg in fsops.list_dirs(self.spark, f"{data}/.rewrite-old"):
+        fsops.delete(self.spark, self._tmp_dir())
+        for seg in self._leaf_dirs(self._aside_dir()):
             live = f"{data}/{seg}"
             aside = self._aside_dir(seg)
             if fsops.exists(self.spark, live):
                 fsops.delete(self.spark, aside)
             elif not fsops.rename(self.spark, aside, live):
                 raise IOError(f"recovery rename failed: {aside} -> {live}")
+        # only emptied __partition=p parents can remain
+        fsops.delete(self.spark, self._aside_dir())
 
     def _commit_rewrite(self, src: str, tmp: str) -> None:
         """Swap the rewritten directory in: rename the live segment aside,
@@ -424,7 +503,7 @@ class Table:
         reports most rename failures by returning false, and a silently
         failed rename here would lose the segment while compact() counts
         it as rewritten."""
-        seg = src.rsplit("/", 1)[1]
+        seg = src[len(self.catalog.data_dir(self.name)) + 1 :]
         aside = self._aside_dir(seg)
         fsops.mkdirs(self.spark, aside.rsplit("/", 1)[0])
         if not fsops.rename(self.spark, src, aside):
@@ -440,46 +519,88 @@ class Table:
         if not fsops.delete(self.spark, aside):
             raise IOError(f"rewrite commit: cleanup delete {aside} failed")
 
+    def _rewrite(self, target_file_bytes: int, order=(), dedup: bool = False) -> int:
+        """Rewrite every live segment in ONE Spark job, then commit each
+        segment by its own rename-aside swap.  Returns segments rewritten.
+
+        The data dir is read once with the table's read schema, filtered to
+        the listed segments (a segment created after the listing is left
+        alone), and written ``partitionBy`` the layout columns into the
+        staging dir, which lands each segment exactly at its ``_tmp_dir``.
+        Each segment gets at most ``n_output_files(segment bytes)`` files:
+        rows are shuffled on (segment, pmod(xxhash64(pk), nfiles)), so a
+        small segment is one task and one file.  ``order`` (column
+        expressions) sorts rows inside each file; when a segment needs
+        several files, rows are range-partitioned on (segment, order)
+        instead, so each file covers a disjoint key range and row-group
+        min/max stats prune across files too.  ``dedup`` keeps the newest
+        version of each primary key (the Overwrite read dedup, applied once
+        at rest)."""
+        self._recover_stale_rewrites()
+        segments = self._segment_dirs()
+        if not segments:
+            return 0
+        meta = self.meta
+        layout = self._layout_columns(meta.options)
+        pk = meta.schema.effective_primary_key
+        nfiles = {
+            seg: fsops.n_output_files(fsops.dir_bytes(self.spark, src), target_file_bytes)
+            for seg, src in segments
+        }
+        df = self.spark.read.schema(self._read_schema()).parquet(
+            self.catalog.data_dir(self.name)
+        )
+        columns = df.columns
+        df = df.filter(_any_segment(nfiles))
+        keys = [f"__order{i}" for i in range(len(order))]
+        df = df.withColumns(dict(zip(keys, order)))
+        total = sum(nfiles.values())
+        if keys and total > len(nfiles):
+            if dedup:
+                df = _keep_newest(df, layout + pk)
+            out = df.repartitionByRange(total, *layout, *keys)
+        else:
+            dist = layout
+            if total > len(nfiles):
+                bucket = F.lit(0)
+                for seg, n in nfiles.items():
+                    if n > 1:
+                        bucket = F.when(
+                            _segment_is(seg), F.pmod(F.xxhash64(*pk), F.lit(n))
+                        ).otherwise(bucket)
+                df = df.withColumn("__bucket", bucket)
+                dist = layout + ["__bucket"]
+            out = df.repartition(total, *dist)
+            if dedup:
+                # the window's clustering contains the repartition keys, so
+                # the dedup reuses that shuffle instead of adding one
+                out = _keep_newest(out, dist + pk)
+        if keys:
+            out = out.sortWithinPartitions(*layout, *keys)
+        (
+            out.select(*columns)
+            .write.mode("overwrite")
+            .partitionBy(*layout)
+            .parquet(self._tmp_dir())
+        )
+        # a segment that held no rows wrote nothing and is left as it is
+        written = set(self._leaf_dirs(self._tmp_dir()))
+        done = [(seg, src) for seg, src in segments if seg in written]
+        for seg, src in done:
+            self._commit_rewrite(src, self._tmp_dir(seg))
+        fsops.delete(self.spark, self._tmp_dir())
+        return len(done)
+
     def compact(self, target_file_bytes: int = fsops.TARGET_FILE_BYTES) -> int:
-        """Rewrite each time partition into compacted, sort-clustered files,
+        """Rewrite every time partition into compacted, sort-clustered files,
         applying Overwrite dedup — the TimeWindow compaction analogue.
         Returns the number of rewritten partitions."""
         meta = self.meta
-        rewritten = 0
-        self._recover_stale_rewrites()
-        for seg, src in self._segment_dirs():
-            df = self.spark.read.parquet(src)
-            if meta.options.update_mode == "OVERWRITE":
-                pk = [
-                    c for c in meta.schema.effective_primary_key if c in df.columns
-                ] or meta.schema.effective_primary_key
-                w = Window.partitionBy(*pk).orderBy(F.col(SEQ_COLUMN).desc())
-                df = df.withColumn("__rn", F.row_number().over(w)).filter(
-                    F.col("__rn") == 1
-                ).drop("__rn")
-            nfiles = fsops.n_output_files(
-                fsops.dir_bytes(self.spark, src), target_file_bytes
-            )
-            sort_key = [
-                c for c in (meta.options.sampled_sort_key or []) if c in df.columns
-            ]
-            if sort_key:
-                # range-partition on the sampled key, then sort within each
-                # output file: files cover disjoint key ranges, so row-group
-                # min/max stats prune across files too (not just inside one)
-                out = (
-                    df.repartitionByRange(nfiles, *sort_key)
-                    .sortWithinPartitions(*sort_key)
-                    if nfiles > 1
-                    else df.coalesce(1).sortWithinPartitions(*sort_key)
-                )
-            else:
-                out = df.repartition(nfiles) if nfiles > 1 else df.coalesce(1)
-            tmp = self._tmp_dir(seg)
-            out.write.mode("overwrite").parquet(tmp)
-            self._commit_rewrite(src, tmp)
-            rewritten += 1
-        return rewritten
+        return self._rewrite(
+            target_file_bytes,
+            order=[F.col(c) for c in meta.options.sampled_sort_key or []],
+            dedup=meta.options.update_mode == "OVERWRITE",
+        )
 
     @staticmethod
     def zorder_column(cols: list[str], bits: int = 16):
@@ -503,39 +624,17 @@ class Table:
     ) -> int:
         """Rewrite every time partition clustered by the Z-order key of
         ``cols`` — after this, row-group min/max stats prune scans on ALL
-        the z-ordered columns, not just the lead sort column.  The rewrite
-        is per-segment (same shape as compact), so at scale it runs as
-        bounded parallel jobs, never a global sort.  Returns partitions
-        rewritten."""
+        the z-ordered columns, not just the lead sort column.  A segment
+        that needs several files is range-partitioned on the z-key, so each
+        file owns a disjoint Morton range (the Delta/Iceberg OPTIMIZE
+        ZORDER shape); the sort never crosses a segment, so at scale there
+        is no global sort.  Returns partitions rewritten."""
         meta = self.meta
         for c in cols:
             kind = meta.schema.column(c).kind
             if kind in ("double", "float", "string", "timestamp", "varbinary"):
                 raise ValueError(f"zorder column {c!r} must be integer-kind, got {kind}")
-        rewritten = 0
-        self._recover_stale_rewrites()
-        for seg, src in self._segment_dirs():
-            df = self.spark.read.parquet(src)
-            z = self.zorder_column(cols, bits)
-            nfiles = fsops.n_output_files(
-                fsops.dir_bytes(self.spark, src), target_file_bytes
-            )
-            # range-partition on the z-key so each output file owns a
-            # disjoint Morton range — min/max prunes on every z-ordered
-            # column across files (the Delta/Iceberg OPTIMIZE ZORDER shape)
-            out = (
-                df.withColumn("__z", z)
-                .repartitionByRange(nfiles, F.col("__z"))
-                .sortWithinPartitions("__z")
-                .drop("__z")
-                if nfiles > 1
-                else df.coalesce(1).sortWithinPartitions(z)
-            )
-            tmp = self._tmp_dir(seg)
-            out.write.mode("overwrite").parquet(tmp)
-            self._commit_rewrite(src, tmp)
-            rewritten += 1
-        return rewritten
+        return self._rewrite(target_file_bytes, order=[self.zorder_column(cols, bits)])
 
     def ttl_expire(self, now_ms: int | None = None) -> int:
         """Drop whole segments beyond TTL (segment-level TTL purge —
@@ -549,9 +648,41 @@ class Table:
         cutoff_seg = (now_ms - meta.options.ttl_ms) // meta.options.segment_duration_ms
         dropped = 0
         for seg, src in self._segment_dirs():
-            seg_val = int(seg.split("=", 1)[1])
+            seg_val = int(seg.rsplit("=", 1)[1])
             # a segment is expired only when its whole range is expired
             if seg_val + 1 <= cutoff_seg:
                 fsops.delete(self.spark, src)
                 dropped += 1
         return dropped
+
+
+def _segment_is(seg: str):
+    """Row predicate selecting one leaf segment, e.g. ``__partition=1/__segment=7``."""
+    cond = None
+    for part in seg.split("/"):
+        col, value = part.split("=", 1)
+        c = F.col(col) == int(value)
+        cond = c if cond is None else cond & c
+    return cond
+
+
+def _any_segment(segments):
+    """Row predicate over the layout columns selecting exactly ``segments``
+    — partition pruning keeps the scan to their directories."""
+    by_parent: dict[str, list[int]] = {}
+    for seg in segments:
+        parent, _, leaf = seg.rpartition("/")
+        by_parent.setdefault(parent, []).append(int(leaf.split("=", 1)[1]))
+    cond = None
+    for parent, values in by_parent.items():
+        c = F.col(SEGMENT_COLUMN).isin(values)
+        if parent:
+            c = _segment_is(parent) & c
+        cond = c if cond is None else cond | c
+    return cond
+
+
+def _keep_newest(df: DataFrame, keys: list[str]) -> DataFrame:
+    """Newest ``__seq`` row per ``keys`` — the Overwrite dedup."""
+    w = Window.partitionBy(*keys).orderBy(F.col(SEQ_COLUMN).desc())
+    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
