@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from incubator_horaedb_spark.catalog import Catalog, TableOptions
+from incubator_horaedb_spark.frontends import sqllex
 from incubator_horaedb_spark.schema import ColumnSchema, TableSchema
 from incubator_horaedb_spark.serving import (
     Limiter,
@@ -49,120 +50,11 @@ from incubator_horaedb_spark.table import Table, local_batch
 _IDENT = r"`(?:[^`]+)`|[A-Za-z_][\w]*"
 
 
-def _strip_leading_comments(stmt: str) -> str:
-    """Drop LEADING `--` / (nested, Spark 3+) `/* */` comments and
-    whitespace so the statement-head dispatch classifies `/* hint */
-    SELECT ...` as a SELECT (r8 review #3: clients — and mysql drivers'
-    connection probes — lead statements with comments).  Only the leading
-    span is removed; Spark lexes interior comments itself."""
-    i, n = 0, len(stmt)
-    while i < n:
-        ch = stmt[i]
-        if ch.isspace():
-            i += 1
-            continue
-        if ch == "-" and stmt[i : i + 2] == "--":
-            j = stmt.find("\n", i)
-            if j < 0:
-                return ""
-            i = j + 1
-            continue
-        if ch == "/" and stmt[i : i + 2] == "/*":
-            depth, j = 1, i + 2
-            while j < n and depth:
-                if stmt[j : j + 2] == "/*":
-                    depth += 1
-                    j += 2
-                elif stmt[j : j + 2] == "*/":
-                    depth -= 1
-                    j += 2
-                else:
-                    j += 1
-            i = j
-            continue
-        break
-    return stmt[i:]
-
-
 def _unquote(ident: str) -> str:
     ident = ident.strip()
     if ident.startswith("`") and ident.endswith("`"):
         return ident[1:-1]
     return ident
-
-
-def _split_top_level(s: str, sep: str = ",") -> list[str]:
-    out, depth, cur, in_str = [], 0, [], None
-    for ch in s:
-        if in_str:
-            cur.append(ch)
-            if ch == in_str:
-                in_str = None
-            continue
-        if ch in "'\"":
-            in_str = ch
-            cur.append(ch)
-        elif ch == "(":
-            depth += 1
-            cur.append(ch)
-        elif ch == ")":
-            depth -= 1
-            cur.append(ch)
-        elif ch == sep and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur))
-    return [x.strip() for x in out if x.strip()]
-
-
-def _extract_parens(s: str, open_idx: int) -> tuple[str, str]:
-    """Given the index of an '(' in s, return (inner_body, tail_after_close),
-    respecting nesting and quoted strings."""
-    depth, in_str = 0, None
-    for i in range(open_idx, len(s)):
-        ch = s[i]
-        if in_str:
-            if ch == in_str:
-                in_str = None
-            continue
-        if ch in "'\"":
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return s[open_idx + 1 : i], s[i + 1 :]
-    raise ValueError("unbalanced parentheses")
-
-
-def _find_top_level(s: str, pattern: str, flags: int = re.I) -> re.Match | None:
-    """First regex match at paren-depth 0 outside string literals."""
-    depth, in_str = 0, None
-    rx = re.compile(pattern, flags)
-    i = 0
-    while i < len(s):
-        ch = s[i]
-        if in_str:
-            if ch == in_str:
-                in_str = None
-            i += 1
-            continue
-        if ch in "'\"":
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            m = rx.match(s, i)
-            if m:
-                return m
-        i += 1
-    return None
 
 
 def _output_alias(item: str) -> str:
@@ -193,28 +85,33 @@ def rewrite_qualify(sql: str) -> str:
     functions see the original FROM — exactly QUALIFY's semantics
     (filter after windows, before ORDER/LIMIT).  Restrictions, enforced
     loudly: the select list must not be bare ``*`` (output names must be
-    derivable) and every computed item needs an AS alias."""
-    q = _find_top_level(sql, r"\bQUALIFY\b")
+    derivable) and every computed item needs an AS alias.  Clauses are
+    found in code only, never inside a string literal or comment."""
+    mask = sqllex.code_mask(sql)
+    q = sqllex.find_top_level(r"\bQUALIFY\b", mask)
     if q is None:
         return sql
-    head, rest = sql[: q.start()].rstrip(), sql[q.end() :]
-    t = _find_top_level(rest, r"\b(ORDER\s+BY|LIMIT)\b")
+    head, mhead, rest = sql[: q.start()], mask[: q.start()], sql[q.end() :]
+    t = sqllex.find_top_level(r"\b(ORDER\s+BY|LIMIT)\b", mask[q.end() :])
     pred, tail = (rest[: t.start()], rest[t.start() :]) if t else (rest, "")
-    m = _find_top_level(head, r"\bSELECT\b")
-    if m is None or m.start() != 0 and head[: m.start()].strip():
+    m = sqllex.find_top_level(r"\bSELECT\b", mhead)
+    if m is None or mhead[: m.start()].strip():
         raise ValueError("QUALIFY rewrite: statement must start with SELECT")
-    f = _find_top_level(head, r"\bFROM\b")
+    f = sqllex.find_top_level(r"\bFROM\b", mhead)
     if f is None:
         raise ValueError("QUALIFY rewrite: no top-level FROM")
-    select_list = head[m.end() : f.start()].strip()
-    if select_list == "*":
+    if mhead[m.end() : f.start()].strip() == "*":
         raise ValueError("QUALIFY rewrite: SELECT * is not supported — name columns")
-    names = ", ".join(_output_alias(i) for i in _split_top_level(select_list))
-    inner = (
-        f"SELECT {select_list}, ({pred.strip()}) AS __qualify "
-        f"{head[f.start():]}"
+    # output names are identifiers, which read the same in the mask
+    names = ", ".join(
+        _output_alias(i) for i in sqllex.split_top_level(mhead[m.end() : f.start()])
     )
-    return f"SELECT {names} FROM (\n{inner}\n) __qualify_q WHERE __qualify {tail}".rstrip()
+    inner = (
+        f"SELECT {sqllex.strip(head[m.end() : f.start()])}, "
+        f"({sqllex.strip(pred)}) AS __qualify {sqllex.strip(head[f.start():])}"
+    )
+    lead = sqllex.strip(head[: m.start()])
+    return f"{lead}SELECT {names} FROM (\n{inner}\n) __qualify_q WHERE __qualify {tail}".rstrip()
 
 
 _COLDEF_RE = re.compile(
@@ -272,7 +169,7 @@ def _parse_literal(tok: str) -> Any:
         return None
     if up in ("TRUE", "FALSE"):
         return up == "TRUE"
-    if tok[:1] in "'\"" and tok[-1:] == tok[:1]:
+    if [(s.kind, s.closed) for s in sqllex.spans(tok)] == [(sqllex.STRING, True)]:
         # decode exactly like spark.sql would for the same literal in a
         # WHERE (doubled quotes AND backslash escapes) — INSERT-stored
         # values must round-trip through spark.sql comparisons
@@ -291,7 +188,9 @@ def _extract_query_range_ms(stmt: str, ts_cols: set[str]) -> int | None:
     (limiter.rs should_limit → QueryPlan::query_range): the span between
     the statement's integer-epoch lower and upper bounds on a timestamp
     key.  None when either bound is missing — unbounded/unknown ranges are
-    NOT blocked, matching the reference (query_range() None → no block)."""
+    NOT blocked, matching the reference (query_range() None → no block).
+    Bounds are read from code only."""
+    stmt = sqllex.code_mask(stmt)
     lo = hi = None
     for name in ts_cols:
         ident = rf"(?:`{re.escape(name)}`|\b{re.escape(name)}\b)"
@@ -344,7 +243,11 @@ class Engine:
             return self._execute_sql_locked(sql)
 
     def _execute_sql_locked(self, sql: str) -> DataFrame | int | None:
-        stmt = _strip_leading_comments(sql.strip().rstrip(";").strip())
+        stmt = sql.strip().rstrip(";").strip()
+        # leading comments go, so `/* hint */ SELECT ...` dispatches as a
+        # SELECT (clients and mysql drivers' connection probes send them)
+        mask = sqllex.code_mask(stmt)
+        stmt = stmt[len(mask) - len(mask.lstrip()) :]
         low = stmt.lower()
         info = self._statement_info(stmt, low)
         # pre-execution gate (validator.rs validate + limiter.rs try_limit)
@@ -411,7 +314,7 @@ class Engine:
                     kv.split("=", 1)
                     for kv in (
                         p.strip().replace("'", "").replace('"', "")
-                        for p in _split_top_level(cm.group(5) or "")
+                        for p in sqllex.split_top_level(cm.group(5) or "")
                     )
                     if "=" in kv
                 )
@@ -431,7 +334,10 @@ class Engine:
         name = _unquote(head.group(2))
         # balanced-paren extraction of the column body (a greedy regex would
         # swallow the WITH(...) clause and silently drop table options)
-        body, tail = _extract_parens(stmt, head.end() - 1)
+        end = sqllex.paren_end(sqllex.code_mask(stmt), head.end() - 1)
+        if end is None:
+            raise ValueError("unbalanced parentheses")
+        body, tail = stmt[head.end() : end - 1], stmt[end:]
         # ENGINE / WITH / PARTITION BY appear in either order (the cluster
         # corpus writes PARTITION BY ... ENGINE ... WITH, the common corpus
         # the reverse) — extract each independently, then require nothing
@@ -474,7 +380,7 @@ class Engine:
         columns: list[ColumnSchema] = []
         ts_key: str | None = None
         primary_key: list[str] = []
-        for item in _split_top_level(body):
+        for item in sqllex.split_top_level(body):
             il = item.lower()
             if il.startswith("timestamp key"):
                 ts_key = _unquote(re.search(r"\(([^)]*)\)", item).group(1))
@@ -523,7 +429,7 @@ class Engine:
 
         opts = {}
         if with_body:
-            for kv in _split_top_level(with_body):
+            for kv in sqllex.split_top_level(with_body):
                 k, v = kv.split("=", 1)
                 opts[k.strip()] = v.strip()
         options = TableOptions.from_with_options(opts)
@@ -564,7 +470,7 @@ class Engine:
             name = _unquote(ms.group(1))
             meta = self.catalog.get(name)
             new_opts: dict[str, str] = {}
-            for kv in _split_top_level(ms.group(2)):
+            for kv in sqllex.split_top_level(ms.group(2)):
                 km = re.match(r"^\s*(\w+)\s*=\s*'([^']*)'\s*$", kv)
                 if not km:
                     raise ValueError(f"cannot parse MODIFY SETTING item {kv!r}")
@@ -584,7 +490,7 @@ class Engine:
         name = _unquote(m.group(1))
         meta = self.catalog.get(name)
         schema = meta.schema
-        for item in _split_top_level(m.group(2)):
+        for item in sqllex.split_top_level(m.group(2)):
             cm = _COLDEF_RE.match(item)
             cname, ctype, rest = _unquote(cm.group(1)), cm.group(2).lower(), cm.group(3)
             if cname in (schema.primary_key or []) or cname == schema.timestamp_column:
@@ -651,10 +557,10 @@ class Engine:
             else [c.name for c in schema.columns]
         )
         rows = []
-        for tup in _split_top_level(m.group(4)):
+        for tup in sqllex.split_top_level(m.group(4)):
             if not (tup.startswith("(") and tup.endswith(")")):
                 raise ValueError(f"bad VALUES tuple {tup!r}")
-            vals = [_parse_literal(v) for v in _split_top_level(tup[1:-1])]
+            vals = [_parse_literal(v) for v in sqllex.split_top_level(tup[1:-1])]
             if len(vals) != len(cols):
                 raise ValueError("VALUES arity mismatch")
             rows.append(dict(zip(cols, vals)))
@@ -730,13 +636,14 @@ class Engine:
     def register_views(self, stmt: str | None = None) -> None:
         """(Re-)register the dedup-read view of every catalog table — or,
         given a statement, only of the tables whose name or view name it
-        contains as an identifier.  The match ignores case and quoting
+        contains as an identifier in code.  The match ignores case and
         context, so it may register a table the statement does not read
         (harmless) but never misses one it does; a SELECT then pays for
         the tables it names, not for the whole catalog.  The system
         tables view is built only when the statement names it."""
         tables = self.catalog.list_tables()
         if stmt is not None:
+            stmt = sqllex.code_mask(stmt)
             words = {(q or w).lower() for q, w in self._WORD_RE.findall(stmt)}
             tables = [
                 t for t in tables
@@ -772,22 +679,19 @@ class Engine:
         sdf.createOrReplaceTempView("__system_tables")
 
     def _query(self, stmt: str) -> DataFrame:
-        from incubator_horaedb_spark.functions.sql_bindings import (
-            register_sql_functions,
-            rewrite_sql_functions,
-        )
+        from incubator_horaedb_spark.functions.sql_bindings import rewrite_sql_functions
 
         self.register_views(stmt)
-        register_sql_functions(self.spark)
         # EXPLAIN VERBOSE (DataFusion: show every optimizer pass — corpus
         # dml/issue-1087.sql) → Spark's EXPLAIN EXTENDED (parsed/analyzed/
         # optimized/physical), the closest all-stages rendering.
         stmt = re.sub(r"^explain\s+verbose\b", "EXPLAIN EXTENDED", stmt, flags=re.I)
         for t in self.catalog.list_tables():
             if "." in t:
-                stmt = stmt.replace(f"`{t}`", f"`{self._view_name(t)}`")
+                view = f"`{self._view_name(t)}`"
+                stmt = sqllex.sub(re.escape(f"`{t}`"), lambda m: view, stmt)
         # system catalog table reference → registered view
-        stmt = self._SYSTEM_TABLES_RE.sub("__system_tables", stmt)
+        stmt = sqllex.sub(self._SYSTEM_TABLES_RE, lambda m: "__system_tables", stmt)
         return self.spark.sql(
             self._coerce_ts_literals(rewrite_qualify(rewrite_sql_functions(stmt)))
         )
@@ -803,13 +707,12 @@ class Engine:
         return self.spark.createDataFrame([(line,) for line in text.splitlines()], "plan string")
 
     _FROM_JOIN_RE = re.compile(rf"\b(?:from|join)\s+({_IDENT})", re.I)
-    _SQL_STRING_RE = re.compile(r"'(?:[^']|'')*'")
 
     def _referenced_tables(self, stmt: str) -> set[str]:
-        """Catalog tables named as FROM/JOIN targets in the statement
-        (derived tables / subquery parens don't match the identifier)."""
+        """Catalog tables named as FROM/JOIN targets in the statement's
+        code (derived tables / subquery parens don't match the identifier)."""
         refs = set()
-        for m in self._FROM_JOIN_RE.finditer(stmt):
+        for m in self._FROM_JOIN_RE.finditer(sqllex.code_mask(stmt)):
             name = _unquote(m.group(1)).replace("__dot__", ".")
             if self.catalog.exists(name):
                 refs.add(name)
@@ -820,9 +723,10 @@ class Engine:
         (the text-frontend analogue of Plan inspection in limiter.rs
         should_limit / validator.rs contains_sub_tables)."""
         if low.startswith(("select", "with", "explain")):
+            mask = sqllex.code_mask(stmt)
             tables = {
                 _unquote(m.group(1)).replace("__dot__", ".")
-                for m in self._FROM_JOIN_RE.finditer(stmt)
+                for m in self._FROM_JOIN_RE.finditer(mask)
             }
             ts_cols = {
                 self.catalog.get(t).schema.timestamp_column
@@ -832,7 +736,7 @@ class Engine:
             return StatementInfo(
                 kind="query",
                 tables=tables,
-                has_predicate=bool(re.search(r"\bwhere\b", low)),
+                has_predicate=bool(re.search(r"\bwhere\b", mask, re.I)),
                 query_range_ms=_extract_query_range_ms(stmt, ts_cols),
             )
         if low.startswith("insert"):
@@ -865,51 +769,42 @@ class Engine:
         considers the timestamp keys of tables actually referenced in this
         statement's FROM/JOIN list (a same-named bigint column in an
         unrelated catalog table must not trigger it) and never rewrites
-        inside string literals."""
+        inside string literals or comments."""
         ts_cols = {
             self.catalog.get(t).schema.timestamp_column
             for t in self._referenced_tables(stmt)
         }
-        if not ts_cols:
-            return stmt
-        parts, last = [], 0
-        for m in self._SQL_STRING_RE.finditer(stmt):
-            parts.append(self._coerce_segment(stmt[last : m.start()], ts_cols))
-            parts.append(m.group(0))
-            last = m.end()
-        parts.append(self._coerce_segment(stmt[last:], ts_cols))
-        return "".join(parts)
-
-    def _coerce_segment(self, stmt: str, ts_cols: set[str]) -> str:
+        wrap = lambda n: f"timestamp_millis({n})"
         for name in ts_cols:
             ident = rf"(?:`{re.escape(name)}`|\b{re.escape(name)}\b)"
-            wrap = lambda n: f"timestamp_millis({n})"
-            stmt = re.sub(
+            # every group is code (an identifier, an operator or digits),
+            # so reading it from the mask reads the statement's text
+            stmt = sqllex.sub(
                 rf"({ident})\s+BETWEEN\s+(\d+)\s+AND\s+(\d+)",
                 lambda m: f"{m.group(1)} BETWEEN {wrap(m.group(2))} AND {wrap(m.group(3))}",
                 stmt,
-                flags=re.I,
+                re.I,
             )
-            stmt = re.sub(
+            stmt = sqllex.sub(
                 rf"({ident})\s*(>=|<=|<>|!=|=|>|<)\s*(\d+)(?!\d*\s*[)]?\s*(?:AS|\w*\())",
                 lambda m: f"{m.group(1)} {m.group(2)} {wrap(m.group(3))}",
                 stmt,
-                flags=re.I,
+                re.I,
             )
-            stmt = re.sub(
+            stmt = sqllex.sub(
                 rf"(\b\d+)\s*(>=|<=|<>|!=|=|>|<)\s*({ident})",
                 lambda m: f"{wrap(m.group(1))} {m.group(2)} {m.group(3)}",
                 stmt,
-                flags=re.I,
+                re.I,
             )
-            stmt = re.sub(
+            stmt = sqllex.sub(
                 rf"({ident})\s+IN\s*\(\s*(\d+(?:\s*,\s*\d+)*)\s*\)",
                 lambda m: "{} IN ({})".format(
                     m.group(1),
                     ", ".join(wrap(x.strip()) for x in m.group(2).split(",")),
                 ),
                 stmt,
-                flags=re.I,
+                re.I,
             )
         return stmt
 

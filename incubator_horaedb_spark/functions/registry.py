@@ -75,12 +75,20 @@ class FunctionRegistry:
         return deco
 
     def register_grouped_agg(self, name: str, returns: str):
-        """UDAF (udaf.rs accumulator analogue): pandas GROUPED_AGG."""
+        """UDAF (udaf.rs accumulator analogue): a pandas UDF whose type
+        hints (``pd.Series -> scalar``) make it a grouped aggregate."""
 
         def deco(fn):
-            from pyspark.sql.functions import PandasUDFType, pandas_udf
+            import pandas as pd
+            from pyspark.sql.functions import pandas_udf
 
-            udf = pandas_udf(fn, returnType=returns, functionType=PandasUDFType.GROUPED_AGG)
+            # the hints are set as objects: fn's own may be strings that
+            # do not resolve (PEP 563), as in register_pandas_scalar
+            def _agg(*cols):
+                return fn(*cols)
+
+            _agg.__annotations__ = {"cols": pd.Series, "return": float}
+            udf = pandas_udf(_agg, returnType=returns)
             self._fns[name.lower()] = FunctionDef(
                 name=name.lower(), fn=udf, returns=returns, kind="grouped_agg"
             )

@@ -23,6 +23,10 @@ through the shim):
   registry resolves it to an HLL accumulator
   (thetasketch_distinct.rs:63-202).
 
+Calls are found on the code mask of frontends/sqllex.py, so a call
+spelled inside a string literal or comment is never rewritten, and a
+``)`` or ``,`` inside one never ends a call or an argument.
+
 ``time_bucket_py`` / ``date_bin_py`` remain as independent pure-Python
 model implementations used by tests to cross-check the rewrite output.
 """
@@ -32,8 +36,7 @@ from __future__ import annotations
 import datetime
 import re
 
-from pyspark.sql import SparkSession
-
+from incubator_horaedb_spark.frontends import sqllex
 from incubator_horaedb_spark.functions.sketches import THETASKETCH_ERROR_RATE
 from incubator_horaedb_spark.functions.time_bucket import _SUBDAY_SECONDS, parse_period
 from incubator_horaedb_spark.functions.timeutil import epoch_ms
@@ -95,59 +98,20 @@ def date_bin_py(
     return _from_ms((ms - origin_ms) // stride_ms * stride_ms + origin_ms)
 
 
-def register_sql_functions(spark: SparkSession) -> None:
-    """No-op, kept for API stability: time_bucket / date_bin on the
-    SQL-text path are handled by textual rewrite to native expressions
-    (rewrite_sql_functions) — no Python UDF registration remains."""
-
-
-def _split_top_level_args(s: str) -> list[str]:
-    """Split an argument list on top-level commas (paren- and
-    quote-aware)."""
-    out, depth, i, start, n = [], 0, 0, 0, len(s)
-    while i < n:
-        c = s[i]
-        if c == "'":
-            i += 1
-            while i < n and s[i] != "'":
-                i += 1
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "," and depth == 0:
-            out.append(s[start:i].strip())
-            start = i + 1
-        i += 1
-    out.append(s[start:].strip())
-    return out
-
-
 def _rewrite_calls(sql: str, name: str, render) -> str:
-    """Replace every ``name(args)`` call with ``render(args_list)`` —
-    balanced-paren scan, iterated to a fixpoint so nested calls resolve.
-    ``render`` may return None to leave a call untouched."""
-    pat = re.compile(rf"\b{name}\s*\(", re.I)
+    """Replace every ``name(args)`` call in code with ``render(args_list)``,
+    iterated to a fixpoint so nested calls resolve.  ``render`` may return
+    None to leave a call untouched."""
     pos = 0
     for _ in range(128):  # cap — every iteration rewrites a call or advances pos
-        m = pat.search(sql, pos)
+        mask = sqllex.code_mask(sql)
+        m = sqllex.search(rf"\b{name}\s*\(", mask, pos)
         if not m:
             return sql
-        depth, i, n = 1, m.end(), len(sql)
-        while i < n and depth:
-            if sql[i] == "'":
-                i += 1
-                while i < n and sql[i] != "'":
-                    i += 1
-            elif sql[i] == "(":
-                depth += 1
-            elif sql[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:
+        end = sqllex.paren_end(mask, m.end() - 1)
+        if end is None:
             return sql  # unbalanced; leave untouched
-        args = _split_top_level_args(sql[m.end() : i - 1])
-        repl = render(args)
+        repl = render(sqllex.split_top_level(sql[m.end() : end - 1]))
         if repl is None:
             # this call is unresolvable at rewrite time (e.g. non-literal
             # period) — skip past it so later rewritable calls in the same
@@ -155,7 +119,7 @@ def _rewrite_calls(sql: str, name: str, render) -> str:
             # genuinely unresolvable call at analysis
             pos = m.end()
             continue
-        sql = sql[: m.start()] + repl + sql[i:]
+        sql = sql[: m.start()] + repl + sql[end:]
         pos = m.start()  # nested calls inside the rendered args re-scan here
     return sql
 
@@ -227,12 +191,15 @@ def _render_date_bin(args: list[str]) -> str | None:
     return None
 
 
-_THETA_RE = re.compile(r"\bthetasketch_distinct\s*\(", re.I)
+def _render_theta(args: list[str]) -> str:
+    return f"approx_count_distinct({', '.join(args)}, {THETASKETCH_ERROR_RATE})"
+
 
 _INTERVAL_MS = {"second": 1000, "minute": 60_000, "hour": 3_600_000, "day": 86_400_000}
+# matched on the code mask, where the two literals' bodies are blanks
 _DATE_BIN_RE = re.compile(
-    r"\bDATE_BIN\(\s*INTERVAL\s+'(\d+)'\s+(second|minute|hour|day)s?\s*,"
-    r"\s*([^,]+?)\s*,\s*TIMESTAMP\s+'([^']+)'\s*\)",
+    r"\bDATE_BIN\(\s*INTERVAL\s+'([^']*)'\s+(second|minute|hour|day)s?\s*,"
+    r"\s*([^,]+?)\s*,\s*TIMESTAMP\s+'([^']*)'\s*\)",
     re.I,
 )
 
@@ -243,41 +210,26 @@ def _rewrite_date_bin(sql: str) -> str:
     (stride_ms, col, origin_ms) arity."""
 
     def sub(m: re.Match) -> str:
-        stride_ms = int(m.group(1)) * _INTERVAL_MS[m.group(2).lower()]
-        origin = datetime.datetime.fromisoformat(m.group(4).replace("Z", "+00:00"))
-        origin_ms = epoch_ms(origin)
-        return f"date_bin({stride_ms}, {m.group(3)}, {origin_ms})"
+        n, origin = (sql[m.start(g) : m.end(g)] for g in (1, 4))
+        if not n.isdecimal() or not origin:
+            return sql[m.start() : m.end()]
+        stride_ms = int(n) * _INTERVAL_MS[m.group(2).lower()]
+        origin_ms = epoch_ms(datetime.datetime.fromisoformat(origin.replace("Z", "+00:00")))
+        return f"date_bin({stride_ms}, {sql[m.start(3) : m.end(3)]}, {origin_ms})"
 
-    return _DATE_BIN_RE.sub(sub, sql)
+    return sqllex.sub(_DATE_BIN_RE, sub, sql)
 
 
 def rewrite_sql_functions(sql: str) -> str:
-    """Rewrite custom functions to native Spark built-in expressions.
+    """Rewrite custom function calls in code to native Spark built-in
+    expressions; string literals and comments are left alone.
 
-    ``thetasketch_distinct(expr)`` → ``approx_count_distinct(expr, 0.008)``:
-    inserts the rsd argument before the closing paren of the matched call
-    (balanced-paren scan, so nested expressions are safe).  The DataFusion
-    DATE_BIN(INTERVAL ...) shape canonicalizes to ``date_bin(ms, col,
-    origin_ms)`` first; then ``date_bin`` and ``time_bucket`` calls expand
-    to the native expression trees (no BatchEvalPython in any plan)."""
+    The DataFusion DATE_BIN(INTERVAL ...) shape canonicalizes to
+    ``date_bin(ms, col, origin_ms)`` first; then ``date_bin`` and
+    ``time_bucket`` calls expand to the native expression trees (no
+    BatchEvalPython in any plan), and ``thetasketch_distinct(expr)``
+    becomes ``approx_count_distinct(expr, 0.008)``."""
     sql = _rewrite_date_bin(sql)
     sql = _rewrite_calls(sql, "date_bin", _render_date_bin)
     sql = _rewrite_calls(sql, "time_bucket", _render_time_bucket)
-    out = []
-    pos = 0
-    for m in _THETA_RE.finditer(sql):
-        depth = 1
-        i = m.end()
-        while i < len(sql) and depth:
-            if sql[i] == "(":
-                depth += 1
-            elif sql[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:
-            break  # unbalanced; leave untouched
-        out.append(sql[pos : m.start()])
-        out.append(f"approx_count_distinct({sql[m.end():i - 1]}, {THETASKETCH_ERROR_RATE})")
-        pos = i
-    out.append(sql[pos:])
-    return "".join(out)
+    return _rewrite_calls(sql, "thetasketch_distinct", _render_theta)

@@ -94,11 +94,6 @@ def _jaccard(d: Dialect, a: str, b: str) -> str:
     return f"CAST({inter} AS DOUBLE) / ({d.size(a)} + {d.size(b)} - {inter})"
 
 
-def shingle_hash_select(d: Dialect, table: str = "documents") -> str:
-    """Standalone SELECT producing (doc_id, shs) — one-shot rendering."""
-    return d.cte_query(_shingle_ctes(d, table), "SELECT doc_id, shs FROM hs")
-
-
 def tokh_select(d: Dialect, table: str = "documents", extra_cols: str = "") -> str:
     """(doc_id[, extra_cols], th): per-token hash list — the only O(chars)
     stage.  Deliberately per-char (hash_list), NOT chunked: tokens average
@@ -451,11 +446,6 @@ def _simhash_from_hs_ctes(d: Dialect, hs_src: str) -> list[tuple[str, str]]:
         ("w", f"SELECT doc_id,\n             {weight_cols}\n      FROM ex GROUP BY doc_id"),
         ("sh", f"SELECT doc_id, {assemble} AS simhash FROM w"),
     ]
-
-
-def simhash_select(d: Dialect, table: str = "documents") -> str:
-    """Standalone SELECT producing (doc_id, simhash) — one-shot rendering."""
-    return d.cte_query(_simhash_ctes(d, table), "SELECT doc_id, simhash FROM sh")
 
 
 def simhash_from_hs_select(d: Dialect, hs_src: str) -> str:

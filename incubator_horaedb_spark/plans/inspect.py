@@ -53,9 +53,3 @@ def has_partial_and_final_agg(df: DataFrame) -> bool:
 def uses_top_k(df: DataFrame) -> bool:
     """ORDER BY + LIMIT planned as TakeOrderedAndProject (no global sort)."""
     return "TakeOrderedAndProject" in explain_str(df, "simple")
-
-
-def wholestage_codegen_ids(df: DataFrame) -> int:
-    """Number of whole-stage-codegen spans — wide spans mean the operator
-    chain stays JVM-side."""
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", explain_str(df))))

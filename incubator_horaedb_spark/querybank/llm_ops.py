@@ -519,28 +519,6 @@ _sql_query("dedup_paragraphs", dedup.paragraph_dedup_sql)
 _sql_query("quality_gopher_rules", text.gopher_rules_sql)
 
 
-def _widened_docs_query(name: str, template_fn):
-    """Like _sql_query, but widens the documents scan first: these
-    templates lead with the per-char token-hash fold, whose interpreted
-    cost per byte is ~100x a parquet scan's — at small corpus sizes the
-    whole stage lands on ONE split and runs on one core (measured:
-    surprisal 1.6s single-task at sf0.1).  widen_for_compute is a no-op
-    once natural splits provide parallelism (any real-scale corpus)."""
-    spark_sql = template_fn(SPARK)
-    duck_sql = template_fn(DUCK)
-
-    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        widen_for_compute(load(spark, sf_dir, "documents")).createOrReplaceTempView(
-            "documents"
-        )
-        return spark.sql(spark_sql)
-
-    q.__name__ = name
-    q.__doc__ = f"{template_fn.__module__}.{template_fn.__name__} — see operator docstring."
-    register(name, oracle=duck_sql)(q)
-    return q
-
-
 def _staged_tokh_query(name: str, template_fn, **kw):
     """Widen the documents scan AND stage the token-hash view (cached):
     these templates reference the token stream 2-3x downstream, and CTE

@@ -14,8 +14,8 @@ Surface parity:
   timestamp literal form — and NULL via the null
   bitmap) and substituted as injection-safe SQL literals (quotes AND
   backslashes doubled, the same rendering wire/postgresql.py proved —
-  the engine lexes Hive escapes); the comment/string-aware scanner
-  counts `?` only at code positions.  COM_STMT_EXECUTE answers a TYPED
+  the engine lexes Hive escapes); `?` is counted only at code positions
+  (frontends/sqllex.py, MySQL dialect).  COM_STMT_EXECUTE answers a TYPED
   binary-protocol resultset (fixed-width ints/floats little-endian,
   LONGLONG for 64-bit values, raw bytes for LONG_BLOB, lenenc strings);
   COM_STMT_CLOSE / COM_STMT_RESET supported.  Unsupported parameter
@@ -47,6 +47,8 @@ import socket
 import socketserver
 import struct
 import threading
+
+from incubator_horaedb_spark.frontends import sqllex
 
 # --- protocol constants ----------------------------------------------------
 CLIENT_PROTOCOL_41 = 0x0200
@@ -562,95 +564,32 @@ class MySQLServer:
             self._thread.join(timeout=5)
 
 
-def _skip_noncode(sql: str, i: int) -> int | None:
-    """If ``sql[i]`` opens a span the statement scanner must not look
-    inside — a single/double-quoted string (backslash escapes honored,
-    MySQL default mode), a backtick identifier, a ``#`` or ``--`` line
-    comment, or a ``/* */`` block comment — return the index one past the
-    span's end (r8: ADVICE r07 — ``SELECT 1 -- ok?`` must not count a
-    parameter).  ``--`` opens a comment UNCONDITIONALLY: MySQL's own lexer
-    wants trailing whitespace, but the BACKING ENGINE (Spark) treats
-    ``--x`` as a comment too, and the scanner must agree with the engine's
-    idea of "code position" — the same invariant the nested-block-comment
-    branch below cites — or a ``?`` after ``--x`` is counted at prepare
-    and its literal substituted into text the engine discards, silently
-    dropping the bound value (ADVICE r08 #2).  None when ``sql[i]`` is
-    ordinary code."""
-    ln = len(sql)
-    ch = sql[i]
-    if ch in ("'", '"', "`"):
-        j = i + 1
-        while j < ln:
-            c = sql[j]
-            if c == "\\" and ch != "`" and j + 1 < ln:
-                j += 2  # escaped char inside a string stays inside it
-                continue
-            if c == ch:
-                if j + 1 < ln and sql[j + 1] == ch:
-                    j += 2  # doubled quote stays inside
-                    continue
-                return j + 1
-            j += 1
-        return ln  # unterminated: rest of text is the span
-    if ch == "#" or (ch == "-" and sql[i : i + 2] == "--"):
-        j = sql.find("\n", i)
-        return ln if j < 0 else j + 1
-    if ch == "/" and sql[i : i + 2] == "/*":
-        # NESTED bracketed comments, matching how the BACKING ENGINE
-        # (Spark 3+) lexes them — the scanner must agree with the engine's
-        # idea of "code position" or a `?` between inner and outer `*/`
-        # gets a literal substituted into comment text (r8 review #4)
-        depth, j = 1, i + 2
-        while j < ln and depth:
-            if sql[j : j + 2] == "/*":
-                depth += 1
-                j += 2
-            elif sql[j : j + 2] == "*/":
-                depth -= 1
-                j += 2
-            else:
-                j += 1
-        return j
-    return None
-
-
 def _count_question_params(sql: str) -> int:
     """`?` placeholders outside quoted strings, backtick identifiers, and
-    comments (shared scanner with `_substitute_question_params`)."""
-    n, i, ln = 0, 0, len(sql)
-    while i < ln:
-        j = _skip_noncode(sql, i)
-        if j is not None:
-            i = j
-            continue
-        if sql[i] == "?":
-            n += 1
-        i += 1
-    return n
+    comments (``#`` included)."""
+    return sum(
+        sql.count("?", s, e)
+        for kind, s, e, _ in sqllex.spans(sql, mysql=True)
+        if kind == sqllex.CODE
+    )
 
 
 def _substitute_question_params(sql: str, literals: list[str]) -> str:
     """Replace the k-th code-position `?` with ``literals[k]`` (already
     rendered as SQL literals).  Raises when counts mismatch."""
-    out: list[str] = []
-    k, i, ln = 0, 0, len(sql)
-    while i < ln:
-        j = _skip_noncode(sql, i)
-        if j is not None:
-            out.append(sql[i:j])
-            i = j
-            continue
-        if sql[i] == "?":
-            if k >= len(literals):
-                raise ValueError("not enough parameters bound")
-            out.append(literals[k])
-            k += 1
-        else:
-            out.append(sql[i])
-        i += 1
+    k = 0
+
+    def bind(_m: re.Match) -> str:
+        nonlocal k
+        if k >= len(literals):
+            raise ValueError("not enough parameters bound")
+        k += 1
+        return literals[k - 1]
+
+    out = sqllex.sub_code_spans(r"\?", bind, sql, mysql=True)
     if k != len(literals):
         raise ValueError(f"statement has {k} placeholders, {len(literals)} bound")
-    return "".join(out)
+    return out
 
 
 class _PreparedStmt:

@@ -30,9 +30,9 @@ Surface parity:
   the following Execute.
   Execute honors the max-rows operand: bounded fetches suspend with
   PortalSuspended and resume on the next Execute of the same portal.
-  The $n placeholder scanner substitutes at code positions only —
-  single/double-quoted strings, backtick identifiers, line and (nested)
-  block comments are skipped.
+  $n placeholders are substituted at code positions only
+  (frontends/sqllex.py) — single/double-quoted strings, backtick
+  identifiers, line and (nested) block comments are skipped.
 - type OIDs = handler.rs convert_data_type: Timestamp → TIMESTAMP(1114),
   Double → FLOAT8, Float → FLOAT4, Varbinary → BYTEA, String → TEXT,
   Int64 → INT8, Int32 → INT4, Int16 → INT2, Boolean → BOOL.
@@ -54,6 +54,8 @@ import socket
 import socketserver
 import struct
 import threading
+
+from incubator_horaedb_spark.frontends import sqllex
 
 SSL_REQUEST_CODE = 80877103
 CANCEL_REQUEST_CODE = 80877102
@@ -199,49 +201,6 @@ def _sql_literal(text: str, oid: int) -> str:
     return "'" + text.replace("\\", "\\\\").replace("'", "''") + "'"
 
 
-def _skip_noncode(sql: str, i: int) -> int | None:
-    """If ``sql[i]`` opens a span the placeholder scanner must not look
-    inside — a single/double-quoted string (the engine lexes BOTH Hive
-    backslash escapes and doubled quotes; Spark treats double quotes as
-    string literals, PG as identifiers — either way ``$n`` inside is not
-    a placeholder), a backtick identifier, a ``--`` line comment, or a
-    (nested, per Spark 3+) ``/* */`` block comment — return the index one
-    past the span (r8: ADVICE r07 — ``SELECT "col$1"`` and comments must
-    not be rewritten).  None when ``sql[i]`` is ordinary code."""
-    n = len(sql)
-    ch = sql[i]
-    if ch in ("'", '"', "`"):
-        j = i + 1
-        while j < n:
-            c = sql[j]
-            if c == "\\" and ch != "`" and j + 1 < n:
-                j += 2  # Hive-style escape stays inside the string
-                continue
-            if c == ch:
-                if j + 1 < n and sql[j + 1] == ch:
-                    j += 2  # doubled quote stays inside
-                    continue
-                return j + 1
-            j += 1
-        return n  # unterminated: rest of text is the span
-    if ch == "-" and sql[i : i + 2] == "--":
-        j = sql.find("\n", i)
-        return n if j < 0 else j + 1
-    if ch == "/" and sql[i : i + 2] == "/*":
-        depth, j = 1, i + 2
-        while j < n and depth:
-            if sql[j : j + 2] == "/*":
-                depth += 1
-                j += 2
-            elif sql[j : j + 2] == "*/":
-                depth -= 1
-                j += 2
-            else:
-                j += 1
-        return j
-    return None
-
-
 def _substitute_params(
     sql: str,
     params: list[str | None],
@@ -253,30 +212,16 @@ def _substitute_params(
     bodies) with rendered literals.  ``null_render`` lets the Describe
     path substitute typed NULLs (CAST(NULL AS ...)) so the planned schema
     matches what a real bind would produce."""
-    out: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        j = _skip_noncode(sql, i)
-        if j is not None:
-            out.append(sql[i:j])
-            i = j
-            continue
-        ch = sql[i]
-        if ch == "$" and i + 1 < n and sql[i + 1].isdigit():
-            j = i + 1
-            while j < n and sql[j].isdigit():
-                j += 1
-            idx = int(sql[i + 1 : j])
-            if not (1 <= idx <= len(params)):
-                raise ValueError(f"parameter ${idx} not bound")
-            v = params[idx - 1]
-            oid = oids[idx - 1] if idx - 1 < len(oids) else 0
-            out.append(null_render(oid) if v is None else _sql_literal(v, oid))
-            i = j
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
+
+    def bind(m: re.Match) -> str:
+        idx = int(m.group(1))
+        if not (1 <= idx <= len(params)):
+            raise ValueError(f"parameter ${idx} not bound")
+        v = params[idx - 1]
+        oid = oids[idx - 1] if idx - 1 < len(oids) else 0
+        return null_render(oid) if v is None else _sql_literal(v, oid)
+
+    return sqllex.sub_code_spans(r"\$(\d+)", bind, sql)
 
 
 # OID → engine type name for typed-NULL rendering (Describe('S') planning)
@@ -1272,7 +1217,7 @@ def _parse_copy(sql: str) -> dict | None:
         i += 1
     table = query = cols = None
     if i < n and s[i] == "(":
-        j = _skip_parens(s, i)
+        j = sqllex.paren_end(sqllex.code_mask(s), i) or n
         query = s[i + 1 : j - 1].strip()
         i = j
     else:
@@ -1284,7 +1229,7 @@ def _parse_copy(sql: str) -> dict | None:
         while i < n and s[i].isspace():
             i += 1
         if i < n and s[i] == "(":
-            j = _skip_parens(s, i)
+            j = sqllex.paren_end(sqllex.code_mask(s), i) or n
             cols = [
                 c.strip().strip('"') for c in s[i + 1 : j - 1].split(",") if c.strip()
             ]
@@ -1545,25 +1490,8 @@ def _copy_encode_row(row, cp: dict) -> bytes:
     return (cp["delim"].join(cells) + "\n").encode("utf-8")
 
 
-def _skip_parens(sql: str, i: int) -> int:
-    """Index one past the balanced paren group opening at ``sql[i]``
-    (strings/identifiers/comments skipped with the shared scanner);
-    ``len(sql)`` when unterminated."""
-    depth, j, n = 0, i, len(sql)
-    while j < n:
-        k = _skip_noncode(sql, j)
-        if k is not None:
-            j = k
-            continue
-        c = sql[j]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return j + 1
-        j += 1
-    return n
+_WORD = re.compile(r"\s*(\w*)\s*")
+_GROUPED_WORD = re.compile(r"[\s(]*(\w*)")
 
 
 def _body_head_after_ctes(sql: str) -> str:
@@ -1574,77 +1502,46 @@ def _body_head_after_ctes(sql: str) -> str:
     (ADVICE r08 #1: spark.sql eagerly executes CTE-led DML, and Describe
     must be side-effect-free).  Returns '' for text this conservative
     walker cannot prove — callers treat '' as not-provably-lazy."""
-    n = len(sql)
-
-    def skip_ws(i: int) -> int:
-        while i < n:
-            if sql[i].isspace():
-                i += 1
-                continue
-            j = _skip_noncode(sql, i)
-            if j is not None and sql[i] in ("-", "/"):  # comment spans only
-                i = j
-                continue
-            break
-        return i
+    mask = sqllex.code_mask(sql)  # comments are blanks, so \s skips them
 
     def word(i: int) -> tuple[str, int]:
-        j = i
-        while j < n and (sql[j].isalnum() or sql[j] == "_"):
-            j += 1
-        return sql[i:j].lower(), j
+        m = _WORD.match(mask, i)
+        return m.group(1).lower(), m.end()
 
-    i = skip_ws(0)
-    while i < n and sql[i] == "(":  # grouped body: (select ...) union ...
-        i = skip_ws(i + 1)
-    w, i = word(i)
+    def past_parens(i: int) -> int:
+        return _WORD.match(mask, sqllex.paren_end(mask, i) or len(mask)).start(1)
+
+    w, i = word(_GROUPED_WORD.match(mask).start(1))
     if w != "with":
         return w
     while True:  # step over one CTE definition per iteration
-        i = skip_ws(i)
         w, i = word(i)
         if w == "recursive":
-            i = skip_ws(i)
             w, i = word(i)
         if not w:
             return ""  # malformed
-        i = skip_ws(i)
-        if i < n and sql[i] == "(":  # optional column alias list
-            i = skip_ws(_skip_parens(sql, i))
+        if mask.startswith("(", i):  # optional column alias list
+            i = past_parens(i)
         w, i = word(i)
-        if w != "as":
-            return ""  # malformed
-        i = skip_ws(i)
-        if i >= n or sql[i] != "(":
+        if w != "as" or not mask.startswith("(", i):
             return ""  # malformed — CTE body must be parenthesized
-        i = skip_ws(_skip_parens(sql, i))
-        if i < n and sql[i] == ",":
-            i += 1
-            continue
-        while i < n and sql[i] == "(":
-            i = skip_ws(i + 1)
-        w, _ = word(i)
-        return w
+        i = past_parens(i)
+        if not mask.startswith(",", i):
+            return _GROUPED_WORD.match(mask, i).group(1).lower()
+        i += 1
 
 
 def _count_placeholders(sql: str) -> int:
-    """Highest $n at a code position (0 when none) — shares the
-    string/identifier/comment scanner with `_substitute_params`."""
-    hi, i, n = 0, 0, len(sql)
-    while i < n:
-        j = _skip_noncode(sql, i)
-        if j is not None:
-            i = j
-            continue
-        if sql[i] == "$" and i + 1 < n and sql[i + 1].isdigit():
-            j = i + 1
-            while j < n and sql[j].isdigit():
-                j += 1
-            hi = max(hi, int(sql[i + 1 : j]))
-            i = j
-            continue
-        i += 1
-    return hi
+    """Highest $n at a code position (0 when none)."""
+    return max(
+        (
+            int(n)
+            for kind, s, e, _ in sqllex.spans(sql)
+            if kind == sqllex.CODE
+            for n in re.findall(r"\$(\d+)", sql[s:e])
+        ),
+        default=0,
+    )
 
 
 def _ddl_tag(low: str) -> str:

@@ -147,22 +147,6 @@ def dec_value(buf: bytes) -> tuple[str, Any]:
     raise ValueError("Value: empty oneof")
 
 
-def value_of(v: Any, *, timestamp: bool = False) -> tuple[str, Any]:
-    """Choose the Value variant the reference's clients send for a python
-    scalar (write.rs convert_proto_value_to_datum table, :1007-1025)."""
-    if timestamp:
-        return "timestamp_value", int(v)
-    if isinstance(v, bool):
-        return "bool_value", v
-    if isinstance(v, int):
-        return "int64_value", v
-    if isinstance(v, float):
-        return "float64_value", v
-    if isinstance(v, (bytes, bytearray)):
-        return "varbinary_value", bytes(v)
-    return "string_value", str(v)
-
-
 # --------------------------------------------------------------- messages --
 
 

@@ -38,3 +38,70 @@ def test_no_float_ms_timestamp_conversion():
         "float-ms conversion found (use functions/timeutil.epoch_ms):\n"
         + "\n".join(offenders)
     )
+
+
+# SQL text is lexed in one place, frontends/sqllex.py.  A hand-rolled
+# quote or comment scanner in a rewrite or placeholder module drifts from
+# the engine's lexical rules (backslash escapes, nested comments) and then
+# rewrites inside a literal or binds a value into a comment.
+_SQL_TEXT_MODULES = (
+    "incubator_horaedb_spark/functions/sql_bindings.py",
+    "incubator_horaedb_spark/frontends/sql_shim.py",
+    "incubator_horaedb_spark/wire/mysql.py",
+    "incubator_horaedb_spark/wire/postgresql.py",
+)
+# these decode text that is already split off: a delimited string body
+# (unescape_sql_string, _sql_str_lit) or COPY CSV data (_csv_parse)
+_DECODERS = {"unescape_sql_string", "_sql_str_lit", "_csv_parse"}
+_RETIRED_SCANNERS = re.compile(
+    r"\b(_skip_noncode|_skip_parens|_split_top_level_args|_split_top_level"
+    r"|_extract_parens|_find_top_level|_strip_leading_comments|_SQL_STRING_RE)\b"
+)
+
+
+def _is_quote_const(node) -> bool:
+    import ast
+
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return node.value != "" and set(node.value) <= {"'", '"', "`"}
+    if isinstance(node, (ast.Tuple, ast.List, ast.Set)):
+        return any(_is_quote_const(e) for e in node.elts)
+    return False
+
+
+def _hand_scans(text: str):
+    """(line, function) of each comparison with a quote character and each
+    comment-marker constant outside the decoders."""
+    import ast
+
+    tree = ast.parse(text)
+    funcs = [n for n in ast.walk(tree) if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
+    owner = {}
+    for f in sorted(funcs, key=lambda f: f.lineno):  # inner defs overwrite outer
+        for n in ast.walk(f):
+            owner[n] = f.name
+    for n in ast.walk(tree):
+        if owner.get(n) in _DECODERS:
+            continue
+        if isinstance(n, ast.Compare) and any(
+            _is_quote_const(x) for x in (n.left, *n.comparators)
+        ):
+            yield n.lineno, owner.get(n, "<module>")
+        elif isinstance(n, ast.Constant) and n.value in ("/*", "*/", "--"):
+            yield n.lineno, owner.get(n, "<module>")
+
+
+def test_sql_text_is_lexed_only_by_sqllex():
+    offenders = []
+    for rel in _SQL_TEXT_MODULES:
+        text = (REPO / rel).read_text(encoding="utf-8")
+        offenders += [f"{rel}:{line} in {fn}" for line, fn in _hand_scans(text)]
+    for path in (REPO / "incubator_horaedb_spark").rglob("*.py"):
+        text = path.read_text(encoding="utf-8", errors="replace")
+        for i, line in enumerate(text.splitlines(), 1):
+            if _RETIRED_SCANNERS.search(line):
+                offenders.append(f"{path.relative_to(REPO)}:{i}: {line.strip()}")
+    assert not offenders, (
+        "hand-rolled SQL quote/comment scanning (use frontends/sqllex.py):\n"
+        + "\n".join(offenders)
+    )
